@@ -16,7 +16,8 @@ Two families of inputs, both written as parquet with pyarrow:
   pass_arrived with at least 8 frames after pass_forward; per block of six
   plays four TRADITIONAL dropbacks, one DESIGNED_ROLLOUT_LEFT and one run;
   the null matchup id / coverage assignment / motion cases; a mirrored
-  route-tree pair per block.
+  route-tree pair per block; a correct read on the first play of every
+  block (``QBMetrics.press`` divides by the mean read rate).
 """
 import hashlib
 import math
@@ -231,9 +232,11 @@ def tracking_tables(seed, games, blocks):
                 n_frames = pf + rng.randint(9, 15)     # >= 8 frames after it
                 is_db, db_type = {4: (True, "DESIGNED_ROLLOUT_LEFT"),
                                   5: (False, "DESIGNED_RUN")}.get(p, (True, "TRADITIONAL"))
+                # play 0's QB reaches the dropback depth on every seed: 20 or more
+                # AFTER_SNAP frames at >= 1.1 yd/s cover 2.2 yards
                 play_rows.append((
                     gid, play_id, off, dfn, is_db, db_type,
-                    round(2.0 + 0.5 * p + rng.uniform(0.0, 1.0), 2), False,
+                    round(2.0 + 0.5 * p + rng.uniform(0.0, 1.0 if p else 0.2), 2), False,
                     round((pf - SNAP_FRAME) / 10.0, 1),
                     15 if p == 1 else 45 + p + rng.randint(0, 10),
                     COVERAGES[(p + b + g) % len(COVERAGES)],
@@ -243,6 +246,15 @@ def tracking_tables(seed, games, blocks):
                 routes = (perm if p == 0 else perm[::-1] if p == 4
                           else [perm[(i + p) % 5] for i in range(5)])
                 target = rng.randint(0, 4)
+                if p == 0:
+                    # Play 0 is thrown to the receiver the read order
+                    # expects at the throw, so every passer has a correct
+                    # read, as every passer in real data does. The read
+                    # nearest the throw is the third when timeToThrow is
+                    # at most 1.2 s (receiver 2), else the fourth:
+                    # receiver 1 when the target lines up right of
+                    # centre, receiver 3 when left.
+                    target = 2 if pf - SNAP_FRAME <= 12 else (1 if target < 3 else 3)
                 for i, pid in enumerate(oid["rr"]):
                     pp_rows.append((
                         gid, play_id, pid, off, True, routes[i], i == target,

@@ -14,6 +14,7 @@ failures, per-op layer rows) is written to ``perfbench/out/``.
 Workloads: interactive, bdb_pipeline (see NOTES.md).
 """
 import argparse
+import glob
 import json
 import os
 import re
@@ -86,9 +87,13 @@ def build():
         raise SystemExit("perfbench: the engine sources (src/main/scala) are missing")
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
-    # sbt's socket directory goes under java.io.tmpdir: keep it in the checkout
-    tmp = os.path.join(BUILD_DIR, "sbt-tmp")
-    os.makedirs(tmp, exist_ok=True)
+    # sbt binds its boot socket under $XDG_RUNTIME_DIR, else java.io.tmpdir.
+    # A unix socket path holds at most 107 bytes, so the directory is given
+    # relative to sbt's working directory: it stays in the checkout however
+    # deep the checkout lies.
+    tmp = os.path.relpath(os.path.join(BUILD_DIR, "sbt-tmp"), HERE)
+    os.makedirs(os.path.join(HERE, tmp), exist_ok=True)
+    env["XDG_RUNTIME_DIR"] = tmp
     opts = ["-Dsbt.offline=true", "-Dsbt.server.autostart=false", "-Xmx2g",
             f"-Djava.io.tmpdir={tmp}"]
     repos = os.path.expanduser("~/.sbt/repositories")
@@ -98,8 +103,8 @@ def build():
     log("building engine and harness (sbt)")
     p = subprocess.run(["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
                         "export Runtime/fullClasspath"],
-                       cwd=HERE, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
-                       text=True, timeout=BUILD_TIMEOUT_S)
+                       cwd=HERE, env=env, stdin=subprocess.DEVNULL, stdout=subprocess.PIPE,
+                       stderr=subprocess.STDOUT, text=True, timeout=BUILD_TIMEOUT_S)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines or ":" not in lines[-1]:
         sys.stderr.write(p.stdout[-4000:])
@@ -110,8 +115,9 @@ def build():
     return lines[-1].strip()
 
 
-def generate(workload, seed, data):
-    """Generate the inputs GEN_REPEATS times; return (median seconds, info,
+def generate(seed, data):
+    """Generate the inputs of both workloads (a traced run probes the other
+    workload's layers) GEN_REPEATS times; return (median seconds, info,
     errors). Every repeat must give the same content, and the next seed
     must give different tracking data."""
     times, digests = [], []
@@ -119,9 +125,7 @@ def generate(workload, seed, data):
         t0 = time.perf_counter()
         _, tracking_digest, rows = gen.tracking(os.path.join(data, "bdb"), seed,
                                                 BDB_GAMES, BDB_BLOCKS)
-        digest = tracking_digest
-        if workload == "interactive":
-            digest += gen.file_digest(gen.relational(os.path.join(data, "relational")))
+        digest = tracking_digest + gen.file_digest(gen.relational(os.path.join(data, "relational")))
         times.append(time.perf_counter() - t0)
         digests.append(digest)
     errors = []
@@ -144,10 +148,16 @@ def check_bdb(record, data, stages):
         cur = con.execute(sql)
         return canon(cur.fetchall(), [d[0] for d in cur.description])
 
+    def stage(pass_dir, table):
+        """The rows of a stage table, or None when its op wrote no file."""
+        pattern = f"{stages}/{pass_dir}/{table}/*.parquet"
+        return rows(f"SELECT * FROM '{pattern}'") if glob.glob(pattern) else None
+
     for table in record["info"]["stage_tables"]:
-        warm = rows(f"SELECT * FROM '{stages}/warm/{table}/*.parquet'")
-        timed = rows(f"SELECT * FROM '{stages}/timed/{table}/*.parquet'")
-        if not warm:
+        warm, timed = stage("warm", table), stage("timed", table)
+        if warm is None or timed is None:
+            errors.append(f"stage table {table} was not written")
+        elif not warm:
             errors.append(f"stage table {table} is empty")
         elif warm != timed:
             errors.append(f"stage table {table} differs between the warm and timed passes")
@@ -156,7 +166,8 @@ def check_bdb(record, data, stages):
         sql = re.sub(r"'%s/(\w+)/\*\.parquet'" % fixture,
                      lambda m: "'%s/%s.parquet'" % (os.path.join(data, "bdb"), m.group(1)),
                      record["info"]["oracle_sql"][query])
-        if rows(f"SELECT * FROM '{stages}/timed/{table}/*.parquet'") != rows(sql):
+        timed = stage("timed", table)
+        if timed is not None and timed != rows(sql):
             errors.append(f"stage table {table} differs from the DuckDB replay of {query}")
     con.close()
     return errors
@@ -174,7 +185,10 @@ def run_jvm(classpath, args, workload, data, out, deadline):
               "--trace", str(args.trace), "--data", data, "--work", WORK, "--out", out,
               "--expected", os.path.join(HERE, "expected.json")])
     with open(os.path.join(WORK, "jvm.log"), "w") as logf:
-        p = subprocess.Popen(cmd, cwd=WORK, stdout=logf, stderr=subprocess.STDOUT)
+        # Spark binds its driver to loopback without a name lookup of the host
+        env = dict(os.environ, SPARK_LOCAL_IP="127.0.0.1", SPARK_LOCAL_HOSTNAME="localhost")
+        p = subprocess.Popen(cmd, cwd=WORK, env=env, stdin=subprocess.DEVNULL, stdout=logf,
+                             stderr=subprocess.STDOUT)
         try:
             rc = p.wait(timeout=max(1.0, deadline - time.monotonic()))
         except subprocess.TimeoutExpired:
@@ -201,7 +215,7 @@ def main():
     os.makedirs(data)
     os.makedirs(OUT, exist_ok=True)
 
-    gen_s, gen_info, errors = generate(args.workload, args.seed, data)
+    gen_s, gen_info, errors = generate(args.seed, data)
     out = os.path.join(OUT, f"{args.workload}-seed{args.seed}-trace{args.trace}.json")
     if os.path.exists(out):
         os.remove(out)

@@ -105,15 +105,27 @@ object Main {
         case "bdb_pipeline" => new BdbWorkload(spark, s"${a.data}/bdb", s"${a.work}/stages", a.seed)
         case other => throw new IllegalArgumentException(s"unknown workload $other")
       }
+      // The layers a workload's own passes do not reach are measured in a
+      // traced run after its timed passes, on the same inputs, by one warm
+      // and one recorded pass of the workload that reaches them.
+      val probes: Seq[Workload] = if (!a.trace) Nil else a.workload match {
+        case "interactive" =>
+          Seq(new BdbWorkload(spark, s"${a.data}/bdb", s"${a.work}/probe-stages", a.seed))
+        case _ => Seq(new LookupWorkload(spark, s"${a.data}/bdb", a.seed, lookupsPerPass),
+          // no queries: only the registry's Tables.load probe
+          new RegistryWorkload(spark, s"${a.data}/relational", Nil, Map.empty, a.seed, None))
+      }
       var nextOp = 0
       val opNames = mutable.Map.empty[Int, String]
+      val probeNames = mutable.Map.empty[Int, String]
 
-      /** Run one op; returns its latency in ms, or None when it failed. */
-      def runOp(op: Op, pass: Int, timed: Boolean): Option[Double] = {
+      /** Run one op, recording its id in `names`; returns its latency in
+        * ms, or None when it failed. */
+      def runOp(op: Op, pass: Int, names: Option[mutable.Map[Int, String]]): Option[Double] = {
         nextOp += 1
         val id = nextOp
         attempted += 1
-        if (timed) opNames(id) = op.name
+        names.foreach(_(id) = op.name)
         def fail(kind: String, msg: String): None.type = {
           failures += Map("op" -> op.name, "pass" -> pass, "class" -> kind, "message" -> msg)
           System.err.println(s"[perfbench] ${op.name} pass $pass failed: $kind: $msg")
@@ -135,7 +147,7 @@ object Main {
         }
       }
 
-      wl.warm.foreach(op => runOp(op, -1, timed = false))
+      wl.warm.foreach(op => runOp(op, -1, None))
       val setupJvmS = ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
 
       val passes = mutable.ArrayBuffer.empty[Map[String, Any]]
@@ -154,7 +166,7 @@ object Main {
         val c0 = osBean.getProcessCpuTime
         val w0 = System.nanoTime()
         val ops = wl.pass(i).map { op =>
-          val ms = runOp(op, i, timed = true)
+          val ms = runOp(op, i, Some(opNames))
           ms.foreach(latencies += _)
           Map("name" -> op.name, "ms" -> ms)
         }
@@ -175,9 +187,15 @@ object Main {
         "ops_n" -> latencies.size.toDouble,
         "peak_rss_mb" -> peakRssMb())
 
+      // probe ops count as attempted and can fail; failures carry pass -2
+      probes.foreach { p =>
+        p.warm.foreach(op => runOp(op, -2, None))
+        p.pass(0).foreach(op => runOp(op, -2, Some(probeNames)))
+      }
       val layers: Map[String, Any] = tracer.map { t =>
         t.drain()
-        Layers.summarise(t, wl, opNames.toMap, passes.size, cores, passWall.min) ++
+        probes.flatMap(p => p.spanMetrics(t.spans.toSeq, probeNames.toMap, 1) ++ p.layerProbes()).toMap ++
+          Layers.summarise(t, wl, opNames.toMap, passes.size, cores, passWall.min) ++
           wl.layerProbes()
       }.getOrElse(Map.empty)
       val opLayers = tracer.map(t => Layers.perOp(t, opNames.toMap)).getOrElse(Nil)
@@ -195,7 +213,8 @@ object Main {
       tracer.foreach { t =>
         val lines = t.spans.map(s => json.writeValueAsString(Map("id" -> s.id, "name" -> s.name,
           "start_ms" -> s.startMs, "end_ms" -> s.endMs, "parent" -> s.parent, "op" -> s.op,
-          "op_name" -> opNames.getOrElse(s.op, "warm"))))
+          "op_name" -> opNames.get(s.op).orElse(probeNames.get(s.op).map("probe " + _))
+            .getOrElse("warm"))))
         Files.write(Paths.get(a.out + ".spans.jsonl"), lines.mkString("", "\n", "\n").getBytes(UTF_8))
       }
     } finally {
